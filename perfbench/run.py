@@ -3,26 +3,29 @@
     python3 perfbench/run.py --workload sales_etl --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. A run generates every op's input from
-``--seed``, then sets the program up three times (the engine's Spark
+``--seed``, imports the program and sets it up (the engine's Spark
 session on ``local[N]``, N = min(4, cpus), plus the workload's own
-set-up): first from process start on a cold JVM, then twice as a new
-session in the same JVM; ``setup_s`` is the median. Then it runs ops
-back to back until ``--seconds`` of op time has passed, checks every
-op's output (untimed), and prints a run record and, as the last line,
-``{"correct", "attempted", "failed", "metrics"}``.
+set-up). Then it runs ops back to back until ``--seconds`` of op time
+has passed, checks every op's output (untimed), and prints a run record
+and, as the last line, ``{"correct", "attempted", "failed", "metrics"}``.
 
 ``--trace 0`` reports the end-to-end metrics of BENCHMARK.json.
+``setup_s`` is this process's cold set-up, timed from process start
+until the program is ready, without input generation and the
+benchmark's own imports.
 ``--trace 1`` runs the workload twice for half of ``--seconds`` each,
 each time from a cold JVM: untraced, then traced (layer timers,
 Catalyst probes, job groups and a Spark event log); it reports the
-per-layer metrics of the traced half, with the tracing overhead. Scratch files live under ``.perfbench_work/``
-in the working directory and are removed on exit.
+per-layer metrics of the traced half, with the tracing overhead.
+Scratch files live under ``.perfbench_work/`` in the working directory
+and are removed on exit.
 """
 
 from __future__ import annotations
 
 import argparse
 import glob
+import importlib
 import json
 import os
 import platform
@@ -35,9 +38,18 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CPUS = min(4, len(os.sched_getaffinity(0)))
-SETUPS = 3
-HEAP = "1g"
 JOB_GROUP = "perfbench-op"
+# What each workload's user imports of the program; part of set-up.
+PROGRAM_MODULES = {
+    "sales_etl": (
+        "analytics_etl_spark.sources.json_ingest",
+        "analytics_etl_spark.plans.pipeline",
+        "analytics_etl_spark.sinks.writer",
+    ),
+    "bi_queries": ("analytics_etl_spark.queries",),
+    "corpus_build": ("analytics_etl_spark.queries",),
+    "corpus_ingest": ("analytics_etl_spark.streaming.ingest",),
+}
 
 
 def since_process_start() -> float:
@@ -72,8 +84,9 @@ class RssSampler(threading.Thread):
         return out
 
     @classmethod
-    def tree_rss_kb(cls) -> tuple[int, int]:
-        """(resident kB, processes) of the process tree."""
+    def tree_rss_kb(cls, java: bool = True) -> tuple[int, int]:
+        """(resident kB, processes) of the process tree; without the JVM
+        itself (but with its children) when not ``java``."""
         total, procs, todo = 0, 0, [(os.getpid(), None)]
         while todo:
             pid, parent_exe = todo.pop()
@@ -87,7 +100,8 @@ class RssSampler(threading.Thread):
             # the child shares the JVM's memory and would count it twice.
             if exe == parent_exe and exe.endswith("/java"):
                 continue
-            total, procs = total + rss, procs + 1
+            if java or not exe.endswith("/java"):
+                total, procs = total + rss, procs + 1
             todo += [(c, exe) for c in cls._children(pid)]
         return total * os.sysconf("SC_PAGE_SIZE") // 1024, procs
 
@@ -108,17 +122,46 @@ class RssSampler(threading.Thread):
         self.join()
 
 
-def start_spark(work: str, attempt: int, event_dir: str | None):
+def retained_kb(spark) -> tuple[int, dict]:
+    """Memory the program holds once its ops are done, in kB: the
+    resident memory of its Python processes (driver and workers), plus
+    the JVM's heap in use after Python and the JVM have collected their
+    garbage, plus the JVM's committed non-heap memory (metaspace, code
+    cache). Leaked cached blocks survive the collection and count in
+    full. The JVM's resident size is not used: how much free heap the
+    collector keeps committed and resident depends on collection
+    timing, not on the program. Also returns the parts, for the run
+    record."""
+    import gc
+
+    gc.collect()  # drops Python references that pin JVM objects
+    jvm = spark.sparkContext._jvm
+    mem = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    # What one collection frees makes more objects unreachable (the
+    # Python side's released references, the ContextCleaner's work), so
+    # the heap settles over several: collect until three readings agree.
+    used: list[int] = []
+    while len(used) < 15 and not (len(used) >= 3 and max(used[-3:]) <= 1.01 * min(used[-3:])):
+        jvm.java.lang.System.gc()
+        time.sleep(0.3)
+        used.append(mem.getHeapMemoryUsage().getUsed())
+    parts = {
+        "python_rss_kb": RssSampler.tree_rss_kb(java=False)[0],
+        "heap_used_kb": used[-1] // 1024,
+        "non_heap_committed_kb": mem.getNonHeapMemoryUsage().getCommitted() // 1024,
+    }
+    return sum(parts.values()), parts
+
+
+def start_spark(work: str, event_dir: str | None):
     from analytics_etl_spark import get_spark
 
     local = os.path.join(work, "spark-local")
     conf = {
         "spark.local.dir": local,
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # the heap is committed and touched up front so that peak RSS does
-        # not depend on when the collector chose to grow it; no JVM file
-        # is written outside the working directory
-        "spark.driver.extraJavaOptions": f"-Xms{HEAP} -XX:+AlwaysPreTouch -XX:-UsePerfData "
+        # no JVM file is written outside the working directory
+        "spark.driver.extraJavaOptions": "-XX:-UsePerfData "
         f"-Djava.io.tmpdir={os.environ['TMPDIR']} -Dderby.system.home={work}",
     }
     if event_dir:
@@ -129,7 +172,7 @@ def start_spark(work: str, attempt: int, event_dir: str | None):
                 "spark.eventLog.compress": "false",
             }
         )
-    spark = get_spark(f"perfbench-{attempt}", extra_conf=conf)
+    spark = get_spark("perfbench", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -285,15 +328,15 @@ def tail(latencies: list[float]) -> tuple[float, float] | None:
     return pct, sorted(latencies)[n - 11]
 
 
-def end_to_end(ops: list[dict], setups: list[float], peak_kb: int) -> dict[str, float]:
+def end_to_end(ops: list[dict], setup_s: float, retained: int) -> dict[str, float]:
     good = [o for o in ops if o["ok"]]
     timed = sum(o["latency_s"] for o in ops)
     return {
-        "setup_s": statistics.median(setups),
+        "setup_s": setup_s,
         "op_p50_s": _med(o["latency_s"] for o in ops),
         "ops_per_s": len(good) / timed,
         "records_per_s": sum(o.get("records", 0) for o in good) / timed,
-        "peak_rss_mb": peak_kb / 1024.0,
+        "retained_mb": retained / 1024.0,
     }
 
 
@@ -398,12 +441,10 @@ def main() -> int:
     ):
         print("perfbench: the engine package or tools/check_oracle.py is missing", file=sys.stderr)
         return 2
-    sys.path[:0] = [HERE, ROOT, os.path.join(ROOT, "tools")]
-    from workloads import WORKLOADS
-
-    if args.workload not in WORKLOADS:
-        print(f"perfbench: unknown workload {args.workload!r}; known: {sorted(WORKLOADS)}", file=sys.stderr)
+    if args.workload not in PROGRAM_MODULES:
+        print(f"perfbench: unknown workload {args.workload!r}; known: {sorted(PROGRAM_MODULES)}", file=sys.stderr)
         return 2
+    sys.path[:0] = [HERE, ROOT, os.path.join(ROOT, "tools")]
 
     load_start = os.getloadavg()
     c0 = time.perf_counter()
@@ -416,11 +457,21 @@ def main() -> int:
     os.environ.update(
         TMPDIR=os.path.join(work, "tmp"),
         SPARK_GRAFT_CPUS=str(CPUS),
-        SPARK_DRIVER_MEMORY=HEAP,
         SPARK_LAUNCHER_OPTS="-XX:-UsePerfData",
         PYSPARK_PYTHON=sys.executable,
     )
-    os.environ.pop("SPARK_GRAFT_MASTER", None)
+    # the program runs with its own master and driver memory defaults
+    for k in ("SPARK_GRAFT_MASTER", "SPARK_DRIVER_MEMORY"):
+        os.environ.pop(k, None)
+
+    # the program's import is part of set-up; the benchmark's own is not
+    for name in PROGRAM_MODULES[args.workload]:
+        importlib.import_module(name)
+    h0 = time.perf_counter()
+    import layers
+    from workloads import WORKLOADS
+
+    harness_s = time.perf_counter() - h0
     sampler = RssSampler()
     sampler.start()
     spark = None
@@ -432,34 +483,25 @@ def main() -> int:
         wl.generate()
         gen_s = time.perf_counter() - g0
 
-        import analytics_etl_spark.queries  # noqa: F401 — program import, part of set-up
-
-        import layers
-
         event_dir = timers = None
         if args.trace:
             event_dir = os.path.join(work, "events")
             os.makedirs(event_dir, exist_ok=True)
             timers = layers.LayerTimers()
-        setups, session_starts = [], []
-        for _ in range(1 if args.trace else SETUPS):
-            if spark is not None:
-                spark.stop()  # a warm set-up: a new session in the same JVM
-            t0 = time.perf_counter()
-            spark = start_spark(work, len(setups), event_dir)
-            session_starts.append(time.perf_counter() - t0)
-            wl.setup(spark, len(setups))
-            # the first set-up runs from process start; input generation
-            # (and a traced run's untraced half) excluded
-            setups.append(
-                since_process_start() - child_s - gen_s if not setups else time.perf_counter() - t0
-            )
+        t0 = time.perf_counter()
+        spark = start_spark(work, event_dir)
+        session_s = time.perf_counter() - t0
+        wl.setup(spark)
+        # from process start: input generation, the benchmark's imports
+        # and a traced run's untraced half excluded
+        setup_s = since_process_start() - child_s - harness_s - gen_s
         if timers:
             timers.take()
         run_versions = versions(spark)
         seconds = args.seconds / 2 if args.trace else args.seconds
         ops = run_ops(wl, spark, seconds, timers, None if args.trace else sampler)
         app_id = spark.sparkContext.applicationId
+        retained, retained_parts = retained_kb(spark) if not args.trace else (0, {})
         stop_spark(spark)
         spark = None
         sampler.stop()
@@ -486,12 +528,15 @@ def main() -> int:
             "load_avg_end": os.getloadavg(),
             **run_versions,
             "generate_s": gen_s,
-            "setup_samples_s": setups,
-            "session_start_samples_s": session_starts,
+            "harness_import_s": harness_s,
+            "setup_s": setup_s,
+            "session_start_s": session_s,
             "ops": len(ops),
             "op_latencies_s": lat,
             "warmup_latencies_s": warmup,
+            "peak_rss_mb": sampler.peak_kb / 1024.0,
             "peak_rss_processes": sampler.peak_procs,
+            "retained_parts": retained_parts,
             "check_s": sum(o.get("check_s", 0.0) for o in ops),
             "wall_s": since_process_start(),
             "ops_failed_frac": n_failed / attempted if attempted else 1.0,
@@ -501,12 +546,12 @@ def main() -> int:
         record["op_tail_s"] = {"percentile": t[0], "value": t[1], "samples": len(lat)} if t else None
         if args.trace:
             overhead = _med(lat) - untraced["metrics"]["op_p50_s"]["value"]
-            metrics = per_layer(ops, groups, session_starts[-1], overhead, wl.construct_layer == "queries")
+            metrics = per_layer(ops, groups, session_s, overhead, wl.construct_layer == "queries")
             record["census"] = [{"i": o["i"], **o["catalyst"]} for o in ops]
             record["spans"] = {o["i"]: o["spans"] for o in ops}
             record["untraced_half"] = untraced
         else:
-            metrics = end_to_end(ops, setups, sampler.peak_kb)
+            metrics = end_to_end(ops, setup_s, retained)
         with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:  # names and units to print
             declared = json.load(fh)["per_layer" if args.trace else "end_to_end"]
         print(json.dumps({"run_record": record}))
