@@ -8,7 +8,6 @@ expression, vectorized under whole-stage codegen — no UDFs.
 
 from __future__ import annotations
 
-import calendar
 import datetime as _dt
 
 from pyspark.sql import Column
@@ -59,10 +58,9 @@ def hour_of_day(col: Column | str) -> Column:
     return F.hour(col)
 
 
-# --- driver-side (parameter) helpers, D1-D4 --------------------------------
+# --- driver-side (parameter) helpers, D1 and D4 ----------------------------
 # These parameterize queries (they produce Python values, not Columns),
-# mirroring the reference's driver-side date math
-# (date_utils.py:105-155, square_service.py:106-135).
+# mirroring the reference's driver-side date math (date_utils.py:105-155).
 
 
 def previous_month_range(today: _dt.date | None = None) -> tuple[str, str]:
@@ -75,19 +73,6 @@ def previous_month_range(today: _dt.date | None = None) -> tuple[str, str]:
     last_of_prev = first_of_this - _dt.timedelta(days=1)
     first_of_prev = last_of_prev.replace(day=1)
     return first_of_prev.isoformat(), last_of_prev.isoformat()
-
-
-def day_window(days_ago: int, today: _dt.date | None = None) -> tuple[str, str]:
-    """D2 — [midnight, midnight) bounds of the day `days_ago` days back."""
-    today = today or _dt.date.today()
-    day = today - _dt.timedelta(days=days_ago)
-    return day.isoformat(), (day + _dt.timedelta(days=1)).isoformat()
-
-
-def month_bounds(year: int, month: int) -> tuple[str, str]:
-    """D3 — first/last day of a given month as ISO strings."""
-    last = calendar.monthrange(year, month)[1]
-    return f"{year:04d}-{month:02d}-01", f"{year:04d}-{month:02d}-{last:02d}"
 
 
 def validate_date_range(start_date: str, end_date: str) -> bool:

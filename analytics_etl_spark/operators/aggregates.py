@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from analytics_etl_spark.functions.money import money_amount
-
 
 def count_by(df: DataFrame, *keys: str, alias: str = "cnt") -> DataFrame:
     """A1 — COUNT(*) per group (reference get_sales_count_by_location,
@@ -33,36 +31,3 @@ def date_range_by(df: DataFrame, ts_col: str, *keys: str) -> DataFrame:
         F.min(d).alias("first_sale_date"), F.max(d).alias("last_sale_date")
     )
 
-
-def revenue_summary(
-    sales: DataFrame,
-    price_col: str = "sale_price",
-    qty_col: str = "qty",
-    keys: tuple[str, ...] = ("month", "location_id"),
-) -> DataFrame:
-    """A3 — the flagship BI aggregate (reference README.md:280-288):
-
-        SELECT month, location_id, COUNT(*) order_count,
-               SUM(sale_price * qty) total_revenue
-        FROM sales GROUP BY 1,2 ORDER BY month DESC
-    """
-    revenue = money_amount(price_col) * F.col(qty_col).cast("decimal(12,2)")
-    return (
-        sales.groupBy(*keys)
-        .agg(
-            F.count("*").alias("order_count"),
-            F.sum(revenue).alias("total_revenue"),
-        )
-        .orderBy(F.desc(keys[0]), *keys[1:])
-    )
-
-
-def grouped_stats(df: DataFrame, value_col: str, *keys: str) -> DataFrame:
-    """Generalized numeric profile per group (extension surface)."""
-    v = money_amount(value_col)
-    return df.groupBy(*keys).agg(
-        F.count("*").alias("n"),
-        F.sum(v).alias("total"),
-        F.min(v).alias("vmin"),
-        F.max(v).alias("vmax"),
-    )

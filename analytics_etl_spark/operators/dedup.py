@@ -84,10 +84,9 @@ def shingle_arrays(
 ) -> DataFrame:
     """(id, text) → (doc_id, shingles: array<string>) — NOT exploded.
 
-    Keeping shingles as a per-row array lets downstream minhashing run
-    as pure projections (array_min over transform) with ZERO shuffle;
-    explode only where a relational shape is genuinely needed
-    (word_shingles / the Jaccard verify join).
+    Keeping shingles as a per-row array lets the Jaccard verify join
+    carry one row per doc; explode only where a relational shape is
+    genuinely needed (word_shingles / the signature aggregation).
     """
     docs = _spread_small_scan(docs, id_col)
     return docs.select(
@@ -211,8 +210,8 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 12) -> DataFrame:
     aggregates in ONE groupBy: no k× row fan-out, one shuffle, and
     partial aggregation means one row per (doc, task) crosses the
     wire. This is the FAST form: every expression here is inside
-    whole-stage codegen (measured 6× faster at sf0.1 than the
-    shuffle-free array-HOF variant below, whose lambdas are
+    whole-stage codegen (measured 6× faster at sf0.1 than a
+    shuffle-free array_min(transform(...)) form, whose lambdas are
     interpreted per element).
     """
     base = shingled.select("doc_id", shingle_hash(F.col("shingle")).alias("hb"))
@@ -221,33 +220,6 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 12) -> DataFrame:
         for i, (a, b) in enumerate(minhash_affine_params(num_hashes))
     ]
     return base.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures_from_arrays(
-    shingle_arr: DataFrame, num_hashes: int = 12
-) -> DataFrame:
-    """(doc_id, shingles array) → wide minhash signature, ZERO shuffle.
-
-    h_i = array_min(transform(hashes, h -> (a_i·h + b_i) mod p)) over
-    the once-hashed shingle array — identical values to the groupBy
-    formulation. Shuffle-free but NOT codegen'd: higher-order-function
-    lambdas are interpreted per element, which measured 6× slower than
-    minhash_signatures' codegen aggregation at sf0.1 — use this form
-    only when avoiding the (tiny, doc-sized) signature shuffle matters
-    more than CPU. Docs with no shingles are dropped (they can't pair
-    anyway).
-    """
-    base = (
-        shingle_arr.filter(F.size("shingles") >= 1)
-        .select("doc_id", F.transform(F.col("shingles"), shingle_hash).alias("hb"))
-    )
-    cols = [
-        F.array_min(
-            F.transform(F.col("hb"), lambda h: (h * F.lit(a) + F.lit(b)) % MINHASH_P)
-        ).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_affine_params(num_hashes))
-    ]
-    return base.select("doc_id", *cols)
 
 
 def lsh_band_buckets(
@@ -709,16 +681,16 @@ def incremental_minhash_dedup(
     """Incremental (daily-ingest) near-dup check: NEW batch vs EXISTING
     corpus. Returns (batch_doc, corpus_doc, jaccard) pairs.
 
-    The shape that keeps a 100 TB corpus ingestable: candidates come
-    from joining the batch's band buckets against the corpus's bucket
-    table on (band, bucket) — batch-batch and corpus-corpus pairs are
-    never generated, so per-ingest join work is O(batch × collision
-    rate), not O(corpus²) or even O(corpus): the corpus side of the
-    bucket join is signature-only (32-byte rows), and at deployment it
-    is a PERSISTED table maintained at ingest (the same write-time
-    pattern as ``with_shingle_column`` / ``write_lsh_index``), so a
-    batch arrival recomputes nothing corpus-sized. Pass
-    ``shingles_col`` when both frames carry the ingest-persisted
+    Candidates come from joining the batch's band buckets against the
+    corpus's on (band, bucket) — batch-batch and corpus-corpus pairs
+    are never generated, so the candidate join's output is O(batch ×
+    collision rate), not O(corpus²). The corpus's buckets themselves
+    are NOT stored: every call re-explodes and re-hashes every corpus
+    shingle into signatures and band buckets, which is O(corpus) work
+    per ingest batch. Persisting a band-bucket column at ingest (the
+    write-time pattern of ``with_shingle_column`` /
+    ``write_lsh_index``) would remove it; that is the open follow-up.
+    Pass ``shingles_col`` when both frames carry the ingest-persisted
     shingle column — then no Arrow kernel runs at all.
 
     Verification joins each side's shingle arrays by its own key (the

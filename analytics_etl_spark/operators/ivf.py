@@ -434,8 +434,9 @@ def _semantic_assigned_pairs(
         )
     assigned = (
         base
-        # consumed three times (both self-join sides + the keep join);
-        # without the pin the Arrow assignment kernel runs three times.
+        # consumed twice (the _cell_pairs_kernel applyInPandas + the
+        # keep join); without the pin the Arrow assignment kernel runs
+        # twice.
         # Lifetime (ADVICE r9): must outlive the caller's action, so no
         # unpersist here — long-lived callers take the handle via
         # ``cache_handles`` (the bloom.py convention) and unpersist

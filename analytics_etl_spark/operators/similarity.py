@@ -538,24 +538,6 @@ def rademacher_planes(
     ]
 
 
-def hyperplane_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """b-bit LSH bucket: bit i = [v · plane_i > 0] (whole-vector signal,
-    unlike sign_bucket's first-dims projection).
-
-    Pure-expression form — fine for a handful of planes; for the
-    multi-table case (hundreds of planes) use
-    ``hyperplane_signatures``: building hundreds of fold expressions
-    costs tens of seconds of driver-side plan construction alone.
-    """
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    v = as_double_array(c)
-    b = F.lit(0)
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        b = b + F.when(dot(v, p) > 0, F.lit(2**i)).otherwise(F.lit(0))
-    return b.cast("int")
-
-
 def hyperplane_signatures(planes: list[list[list[float]]]):
     """Arrow-vectorized LSH signature kernel: vec -> array<int> of
     per-table bucket ids, via ONE (batch × dim) @ (dim × tables·bits)

@@ -5,13 +5,17 @@ foreachBatch pipeline over document arrivals.
 
 Per micro-batch:
 1. shingle ONCE (``with_shingle_column`` — the ingest-time kernel
-   pass; the written column serves every future batch for free);
+   pass, pinned for the batch's gates and write; the written column
+   serves every future batch without the kernel);
 2. drop batch-INTERNAL near-dups (MinHash-LSH over the batch only,
    higher id loses — batches are small, this is cheap);
 3. drop docs near-duplicating the EXISTING corpus: the batch's band
-   buckets join the corpus bucket table — O(batch), the corpus side
-   reads its persisted shingle column, nothing corpus-sized is
-   recomputed (see incremental_minhash_dedup);
+   buckets join the corpus's on (band, bucket). The corpus side reads
+   its persisted shingle column (no kernel), but still re-explodes and
+   re-hashes every corpus shingle into band buckets on every batch —
+   O(corpus) work per batch. A persisted band-bucket column written
+   at ingest would make it O(batch); that is the open follow-up (see
+   incremental_minhash_dedup);
 4. append survivors (WITH shingles) under ``epoch=<id>/`` —
    overwriting the epoch directory, so a replayed micro-batch after
    a failure rewrites the same directory with the same rows:
@@ -46,49 +50,57 @@ def ingest_batch(
     replay is directly testable: same (batch, epoch) in, same corpus
     state out)."""
     spark = batch_df.sparkSession
-    shingled = with_shingle_column(batch_df, n=shingle_n)
-
-    # batch-internal near-dups: higher id of each verified pair loses
-    internal = minhash_lsh_dedup(
-        shingled, shingles_col="shingles", min_jaccard=min_jaccard
-    )
-    internal_drop = internal.select(F.col("doc_b").alias("doc_id")).distinct()
-    batch_clean = shingled.join(internal_drop, "doc_id", "left_anti")
-
+    # both gates and the write read the shingled batch: pin it so the
+    # Arrow kernel runs once per batch, and release every pin before
+    # returning so a long-running stream accumulates no cached blocks
+    shingled = with_shingle_column(batch_df, n=shingle_n).persist()
+    pinned = [shingled]
     try:
-        # exclude THIS epoch's directory from the corpus side: on a
-        # failure replay the previous attempt's output is already on
-        # disk, and gating the batch against its own prior write would
-        # self-dedup every doc to zero — the replay must see exactly
-        # the corpus state the first attempt saw
-        corpus = spark.read.parquet(corpus_path).filter(
-            F.col("epoch") != int(epoch_id)
-        )
-        have_corpus = True
-    except Exception:  # first batch: nothing ingested yet
-        have_corpus = False
+        shingled.count()
 
-    if have_corpus:
-        pairs = incremental_minhash_dedup(
-            corpus,
-            batch_clean,
-            shingles_col="shingles",
-            min_jaccard=min_jaccard,
+        # batch-internal near-dups: higher id of each verified pair loses
+        internal = minhash_lsh_dedup(
+            shingled, shingles_col="shingles", min_jaccard=min_jaccard
         )
-        # pair-sized frame consumed twice (rejects + anti-join):
-        # materialize once instead of re-running both LSH chains
-        pairs = pairs.localCheckpoint(eager=True)
-        if rejects_path is not None:
-            pairs.withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-                "overwrite"
-            ).parquet(f"{rejects_path}/epoch={int(epoch_id)}")
-        vs_corpus_drop = pairs.select(
-            F.col("batch_doc").alias("doc_id")
-        ).distinct()
-        batch_clean = batch_clean.join(vs_corpus_drop, "doc_id", "left_anti")
+        internal_drop = internal.select(F.col("doc_b").alias("doc_id")).distinct()
+        batch_clean = shingled.join(internal_drop, "doc_id", "left_anti")
 
-    # epoch-directory overwrite = idempotent under foreachBatch replay
-    batch_clean.write.mode("overwrite").parquet(f"{corpus_path}/epoch={int(epoch_id)}")
+        try:
+            # exclude THIS epoch's directory from the corpus side: on a
+            # failure replay the previous attempt's output is already on
+            # disk, and gating the batch against its own prior write would
+            # self-dedup every doc to zero — the replay must see exactly
+            # the corpus state the first attempt saw
+            corpus = spark.read.parquet(corpus_path).filter(
+                F.col("epoch") != int(epoch_id)
+            )
+            have_corpus = True
+        except Exception:  # first batch: nothing ingested yet
+            have_corpus = False
+
+        if have_corpus:
+            pairs = incremental_minhash_dedup(
+                corpus,
+                batch_clean,
+                shingles_col="shingles",
+                min_jaccard=min_jaccard,
+            )
+            if rejects_path is not None:
+                # pair-sized frame read twice (rejects + anti-join)
+                pinned.append(pairs.persist())
+                pairs.withColumn("epoch", F.lit(int(epoch_id))).write.mode(
+                    "overwrite"
+                ).parquet(f"{rejects_path}/epoch={int(epoch_id)}")
+            vs_corpus_drop = pairs.select(
+                F.col("batch_doc").alias("doc_id")
+            ).distinct()
+            batch_clean = batch_clean.join(vs_corpus_drop, "doc_id", "left_anti")
+
+        # epoch-directory overwrite = idempotent under foreachBatch replay
+        batch_clean.write.mode("overwrite").parquet(f"{corpus_path}/epoch={int(epoch_id)}")
+    finally:
+        for df in pinned:
+            df.unpersist(blocking=True)
 
 
 def streaming_corpus_ingest(

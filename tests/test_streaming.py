@@ -288,16 +288,37 @@ def test_stream_static_enrichment(spark, tmp_path):
     assert any(cat is None for _, cat in rows)
 
 
-def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path):
+def _run_nodes(plan) -> list[str]:
+    """Names of the physical operators ``plan`` runs. Adaptive and
+    query-stage wrappers are opened; an InMemoryTableScan is a leaf —
+    the cached plan its text repeats ran once, when the pin filled."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _run_nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _run_nodes(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in _run_nodes(kids.apply(i))]
+
+
+def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path, monkeypatch):
     """The incremental-dedup story under Structured Streaming: batch 1
     seeds the corpus (internal near-dups dropped), batch 2 is gated
-    against the PERSISTED corpus state (its shingle column — nothing
-    corpus-sized recomputed), rejects are attributable, and a replayed
+    against the PERSISTED corpus state (its shingle column, so no
+    kernel runs on the corpus side — its band buckets are still
+    recomputed per batch), rejects are attributable, and a replayed
     micro-batch leaves the corpus byte-identical (epoch-directory
-    overwrite = idempotent)."""
+    overwrite = idempotent) whether or not it records rejects.
+
+    Every frame ingest_batch writes reads the shingled batch from its
+    pin: the executed plan runs no Python eval node, so the Arrow
+    shingling kernel ran once per batch, upstream. And the stream
+    accumulates no cached blocks: after the three ingest_batch calls
+    no RDD they persisted is still registered."""
     import shutil
 
     import pyspark.sql.types as T
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from analytics_etl_spark.operators.dedup import (
         incremental_minhash_dedup,
@@ -315,6 +336,24 @@ def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path):
     landing.mkdir()
     corpus_path = str(tmp_path / "corpus")
     rejects_path = str(tmp_path / "rejects")
+
+    # executed plans of the frames ingest_batch writes (staging writes
+    # of the landing files are not its)
+    runs = []
+    write = DataFrameWriter.parquet
+
+    def capture(writer, path, *args, **kwargs):
+        if path.startswith((corpus_path, rejects_path)):
+            runs.append(_run_nodes(writer._df._jdf.queryExecution().executedPlan()))
+        return write(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capture)
+    jsc = spark.sparkContext._jsc
+
+    def pinned_ids():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before_stream = pinned_ids()
 
     def stage(df, name):
         d = tmp_path / f"stage_{name}"
@@ -340,6 +379,9 @@ def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    # the stream released every pin its two batches took (older RDDs
+    # may be cleaned meanwhile, so compare ids, not counts)
+    assert not pinned_ids() - before_stream
 
     corpus = spark.read.parquet(corpus_path)
     got_ids = {r["doc_id"] for r in corpus.select("doc_id").collect()}
@@ -373,10 +415,28 @@ def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path):
     assert "shingles" in corpus.columns
 
     # failure replay: re-running epoch 1 with the same batch leaves
-    # the corpus identical (overwrite of the same epoch directory)
-    before = corpus.count()
-    ingest_batch(b2, 1, corpus_path, rejects_path=rejects_path, min_jaccard=0.5)
-    assert spark.read.parquet(corpus_path).count() == before
+    # the corpus identical (overwrite of the same epoch directory).
+    # The replay records no rejects: with rejects the pair frame is
+    # pinned for its second reader, and the corpus written without
+    # that pin must hold the same rows
+    def epoch_ids():
+        return sorted(
+            (r["epoch"], r["doc_id"])
+            for r in spark.read.parquet(corpus_path).select("epoch", "doc_id").collect()
+        )
+
+    before = epoch_ids()
+    before_replay = pinned_ids()
+    ingest_batch(b2, 1, corpus_path, min_jaccard=0.5)
+    assert not pinned_ids() - before_replay
+    assert epoch_ids() == before
+
+    # two corpus writes + the rejects of the batch that met a corpus,
+    # then the replay's corpus write
+    assert len(runs) == 4
+    for nodes in runs:
+        assert not [n for n in nodes if "EvalPython" in n], nodes
+        assert "InMemoryTableScan" in nodes, nodes
 
 
 def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
