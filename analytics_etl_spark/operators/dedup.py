@@ -251,7 +251,7 @@ def lsh_band_buckets(
 
 
 def lsh_candidate_pairs(
-    buckets: DataFrame, max_bucket_size: int | None = None
+    buckets: DataFrame, max_bucket_size: int | None = None, anchored: bool = False
 ) -> DataFrame:
     """Distinct candidate pairs from shared (band, bucket).
 
@@ -274,6 +274,14 @@ def lsh_candidate_pairs(
     literature — caps or splits hot buckets). Default None keeps the
     exact semantics for the oracle-checked queries; corpus-scale
     deployments set a cap around 10^3–10^4.
+
+    ``anchored`` is the incremental form, one pass over new and
+    existing docs together: ``doc_id`` is a ``struct(side, doc_id)``
+    key, side 0 for a new doc and 1 for an existing one. Keys sort by
+    side first, so new docs lead each bucket's list, and pairs expand
+    only from side-0 positions: new-new and new-existing pairs come
+    out (the new doc always ``doc_a`` of a new-existing pair),
+    existing-existing pairs never do.
     """
     grouped = (
         buckets.groupBy("band", "bucket")
@@ -282,7 +290,12 @@ def lsh_candidate_pairs(
     )
     if max_bucket_size is not None:
         grouped = grouped.filter(F.size("ids") <= max_bucket_size)
+    if anchored:
+        # a bucket whose first member is existing has no new member
+        grouped = grouped.filter(F.col("ids")[0]["side"] == 0)
     e1 = grouped.select("ids", F.posexplode("ids").alias("i", "doc_a"))
+    if anchored:
+        e1 = e1.filter(F.col("doc_a.side") == 0)
     # ids are sorted, so everything after position i is > doc_a
     rest = F.slice(
         F.col("ids"),

@@ -117,9 +117,17 @@ def run_sales_pipeline(
     """
     sales, rejects = sales_pipeline(orders, locations, config)
     stats: dict[str, int] = {}
-    if config.sales_path:
+    cached = bool(config.sales_path)
+    if cached:
         sales = sales.cache()
-        overwrite_partitions(sales, config.sales_path)
-    stats["sales_rows"] = sales.count()
-    stats["reject_rows"] = rejects.count()
+    try:
+        if cached:
+            overwrite_partitions(sales, config.sales_path)
+        stats["sales_rows"] = sales.count()
+        stats["reject_rows"] = rejects.count()
+    finally:
+        if cached:
+            # released once counted: repeated runs in one session
+            # accumulate no cached blocks
+            sales.unpersist(blocking=True)
     return stats

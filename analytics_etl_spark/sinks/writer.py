@@ -26,6 +26,29 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_PARTITION_KEYS = ("location_id", "month")
 
 
+def read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when no table is there yet.
+
+    Only the first-load shapes mean "no table": the path doesn't
+    exist, or exists but holds no parquet yet (pre-created mount dir,
+    died-mid-first-write leftovers). Any OTHER failure (permissions,
+    corrupt footers, transient IO) propagates: a caller that took it
+    for "no table" would act blind on a table it could not read — a
+    confirmed overwrite with nothing counted, an ingest gate admitting
+    a batch with no corpus to check it against.
+    """
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if not any(
+            code in str(e) for code in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+        ):
+            raise
+        return None
+
+
 def append_partitioned(
     df: DataFrame, path: str, partition_keys: tuple[str, ...] = DEFAULT_PARTITION_KEYS
 ) -> None:
@@ -70,28 +93,15 @@ def overwrite_partitions_gated(
     count uses a semi join against df's distinct partition tuples —
     partition-pruned at the scan, no full-table read.
     """
-    from pyspark.errors import AnalysisException
-
-    spark = df.sparkSession
     keys = list(partition_keys)
-    try:
-        existing = spark.read.parquet(path)
+    # no table yet means nothing to replace; a table that cannot be
+    # read raises — "0 rows to replace" would let a confirmed
+    # overwrite proceed blind, the exact delete this gate prevents
+    existing = read_parquet_if_present(df.sparkSession, path)
+    count = 0
+    if existing is not None:
         doomed = existing.join(df.select(*keys).distinct(), on=keys, how="semi")
         count = doomed.count()
-    except AnalysisException as e:
-        # first-load shapes: the path doesn't exist, or exists but
-        # holds no parquet yet (pre-created mount dir, died-mid-first-
-        # write leftovers) — both mean "nothing to replace". Any OTHER
-        # failure (permissions, corrupt footers, transient IO) must
-        # propagate: swallowing it would report "0 rows to replace"
-        # and let a confirmed overwrite proceed on a table we couldn't
-        # even read — the exact blind delete this gate exists to
-        # prevent.
-        if not any(
-            code in str(e) for code in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        ):
-            raise
-        count = 0
     if not confirm:
         return count, False
     overwrite_partitions(df, path, partition_keys)
@@ -275,7 +285,6 @@ def merge_upsert_partitioned(
     """
     from functools import reduce
 
-    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     missing = [k for k in partition_keys if k not in key_cols]
@@ -289,13 +298,8 @@ def merge_upsert_partitioned(
     touched = [tuple(r) for r in updates.select(*pkeys).distinct().collect()]
     if not touched:
         return 0
-    try:
-        target = spark.read.parquet(target_path)
-    except AnalysisException as e:
-        if not any(
-            code in str(e) for code in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        ):
-            raise
+    target = read_parquet_if_present(spark, target_path)
+    if target is None:
         # first load: nothing to merge against
         append_partitioned(updates, target_path, partition_keys)
         return len(touched)

@@ -4,26 +4,32 @@ production corpus actually grows: as a Structured Streaming
 foreachBatch pipeline over document arrivals.
 
 Per micro-batch:
-1. shingle ONCE (``with_shingle_column`` — the ingest-time kernel
+1. shingle ONCE (the ``with_shingle_column`` kernel — the ingest-time
    pass, pinned for the batch's gates and write; the written column
    serves every future batch without the kernel);
-2. drop batch-INTERNAL near-dups (MinHash-LSH over the batch only,
-   higher id loses — batches are small, this is cheap);
-3. drop docs near-duplicating the EXISTING corpus: the batch's band
-   buckets join the corpus's on (band, bucket). The corpus side reads
-   its persisted shingle column (no kernel), but still re-explodes and
-   re-hashes every corpus shingle into band buckets on every batch —
-   O(corpus) work per batch. A persisted band-bucket column written
-   at ingest would make it O(batch); that is the open follow-up (see
+2. find every near-dup pair of the batch in ONE MinHash-LSH pass: the
+   batch's shingle arrays and the existing corpus's go into one frame
+   keyed by ``struct(side, doc_id)`` (side 0 batch, 1 corpus), one
+   signature/band-bucket build, one (band, bucket) grouping that
+   expands pairs only from batch members (batch-batch and
+   batch-corpus pairs, never corpus-corpus), one exact-Jaccard
+   verify. The corpus side reads its persisted shingle column (no
+   kernel), but still re-explodes and re-hashes every corpus shingle
+   into band buckets on every batch — O(corpus) work per batch. A
+   persisted band-bucket column written at ingest would make it
+   O(batch); that is the open follow-up (see
    incremental_minhash_dedup);
+3. drop the losers: in a batch-internal pair the higher id loses, in
+   a pair with a corpus doc the batch doc does;
 4. append survivors (WITH shingles) under ``epoch=<id>/`` —
    overwriting the epoch directory, so a replayed micro-batch after
    a failure rewrites the same directory with the same rows:
    IDEMPOTENT, the same delete-then-reload contract as
    ``write_idempotent_partitions``;
 5. optionally record (batch_doc, corpus_doc, jaccard) rejects for
-   audit — every dropped doc is attributable, the same quarantine
-   discipline as the sales pipeline.
+   audit — the corpus pairs of batch docs that no internal pair
+   already dropped, so every dropped doc is attributable, the same
+   quarantine discipline as the sales pipeline.
 """
 
 from __future__ import annotations
@@ -32,10 +38,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from analytics_etl_spark.operators.dedup import (
-    incremental_minhash_dedup,
-    minhash_lsh_dedup,
-    with_shingle_column,
+    lsh_band_buckets,
+    lsh_candidate_pairs,
+    minhash_signatures,
+    shingle_udf,
+    verify_jaccard,
 )
+from analytics_etl_spark.sinks.writer import read_parquet_if_present
+
+
+def _sided(df: DataFrame, side: int) -> DataFrame:
+    """(struct(side, doc_id), distinct shingles) rows of one side of
+    the gate; the struct key keeps a batch doc and a corpus doc apart
+    even when they carry the same doc_id."""
+    return df.select(
+        F.struct(F.lit(side).alias("side"), F.col("doc_id")).alias("doc_id"),
+        # array_distinct: the silent-understated-Jaccard defense of
+        # minhash_lsh_dedup's shingles_col path (see its docstring)
+        F.array_distinct(F.col("shingles")).alias("shingles"),
+    )
 
 
 def ingest_batch(
@@ -48,56 +69,72 @@ def ingest_batch(
 ) -> None:
     """One micro-batch of the gated ingest (module-level so failure
     replay is directly testable: same (batch, epoch) in, same corpus
-    state out)."""
-    spark = batch_df.sparkSession
-    # both gates and the write read the shingled batch: pin it so the
+    state out).
+
+    Both gates are one LSH pass (module docstring, steps 2-3); the
+    rows it keeps and the rejects it records are those of
+    ``minhash_lsh_dedup`` on the batch followed by
+    ``incremental_minhash_dedup`` of the survivors against the corpus
+    (same banding, same verify)."""
+    # the gate and the write read the shingled batch: pin it so the
     # Arrow kernel runs once per batch, and release every pin before
-    # returning so a long-running stream accumulates no cached blocks
-    shingled = with_shingle_column(batch_df, n=shingle_n).persist()
+    # returning so a long-running stream accumulates no cached blocks.
+    # The kernel runs on the batch's own scan partitions, not
+    # with_shingle_column's spread: a micro-batch is small, and every
+    # Python task's input row queue (one Tungsten page: 64 MB on
+    # local[4] with the engine's 8g heap) stays reachable from Spark's
+    # worker monitor thread for up to 2 s after the task starts — four
+    # spread tasks held 256 MB past the end of a ~1 s batch
+    shingled = batch_df.withColumn(
+        "shingles", shingle_udf(shingle_n)(F.col("text"))
+    ).persist()
     pinned = [shingled]
     try:
         shingled.count()
 
-        # batch-internal near-dups: higher id of each verified pair loses
-        internal = minhash_lsh_dedup(
-            shingled, shingles_col="shingles", min_jaccard=min_jaccard
+        # exclude THIS epoch's directory from the corpus side: on a
+        # failure replay the previous attempt's output is already on
+        # disk, and gating the batch against its own prior write would
+        # self-dedup every doc to zero — the replay must see exactly
+        # the corpus state the first attempt saw. No corpus yet (first
+        # batch) is the only read failure that means "no gate"
+        corpus = read_parquet_if_present(batch_df.sparkSession, corpus_path)
+        sides = _sided(shingled, 0)
+        if corpus is not None:
+            corpus = corpus.filter(F.col("epoch") != int(epoch_id))
+            sides = sides.unionByName(_sided(corpus, 1))
+
+        exploded = sides.select("doc_id", F.explode("shingles").alias("shingle"))
+        cands = lsh_candidate_pairs(
+            lsh_band_buckets(minhash_signatures(exploded)), anchored=True
         )
-        internal_drop = internal.select(F.col("doc_b").alias("doc_id")).distinct()
-        batch_clean = shingled.join(internal_drop, "doc_id", "left_anti")
+        pairs = verify_jaccard(sides, cands).filter(F.col("jaccard") >= min_jaccard)
 
-        try:
-            # exclude THIS epoch's directory from the corpus side: on a
-            # failure replay the previous attempt's output is already on
-            # disk, and gating the batch against its own prior write would
-            # self-dedup every doc to zero — the replay must see exactly
-            # the corpus state the first attempt saw
-            corpus = spark.read.parquet(corpus_path).filter(
-                F.col("epoch") != int(epoch_id)
+        internal = F.col("doc_b.side") == 0
+        if corpus is not None and rejects_path is not None:
+            # pair-sized frame read twice (rejects + the drop list)
+            pinned.append(pairs.persist())
+            internal_drop = pairs.filter(internal).select(
+                F.col("doc_b.doc_id").alias("batch_doc")
             )
-            have_corpus = True
-        except Exception:  # first batch: nothing ingested yet
-            have_corpus = False
+            pairs.filter(~internal).select(
+                F.col("doc_a.doc_id").alias("batch_doc"),
+                F.col("doc_b.doc_id").alias("corpus_doc"),
+                "jaccard",
+            ).join(internal_drop, "batch_doc", "left_anti").withColumn(
+                "epoch", F.lit(int(epoch_id))
+            ).write.mode("overwrite").parquet(f"{rejects_path}/epoch={int(epoch_id)}")
 
-        if have_corpus:
-            pairs = incremental_minhash_dedup(
-                corpus,
-                batch_clean,
-                shingles_col="shingles",
-                min_jaccard=min_jaccard,
-            )
-            if rejects_path is not None:
-                # pair-sized frame read twice (rejects + anti-join)
-                pinned.append(pairs.persist())
-                pairs.withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-                    "overwrite"
-                ).parquet(f"{rejects_path}/epoch={int(epoch_id)}")
-            vs_corpus_drop = pairs.select(
-                F.col("batch_doc").alias("doc_id")
-            ).distinct()
-            batch_clean = batch_clean.join(vs_corpus_drop, "doc_id", "left_anti")
-
+        # internal pair: the higher id (doc_b) loses; corpus pair: the
+        # batch doc (doc_a) loses
+        drop = pairs.select(
+            F.when(internal, F.col("doc_b.doc_id"))
+            .otherwise(F.col("doc_a.doc_id"))
+            .alias("doc_id")
+        )
+        survivors = shingled.join(drop, "doc_id", "left_anti")
         # epoch-directory overwrite = idempotent under foreachBatch replay
-        batch_clean.write.mode("overwrite").parquet(f"{corpus_path}/epoch={int(epoch_id)}")
+        survivors.write.mode("overwrite").parquet(f"{corpus_path}/epoch={int(epoch_id)}")
     finally:
         for df in pinned:
             df.unpersist(blocking=True)
@@ -314,17 +351,9 @@ def _merge_swap_table(spark, path: str, fresh: DataFrame, merge_fn, finalize_tmp
     tmp directory (the bloom param sidecar) therefore move in
     atomically with the data they describe; a crash before the swap
     discards data + sidecar together, never one without the other."""
-    from pyspark.errors import AnalysisException
-
     _recover_interrupted_swap(path)
-    try:
-        merged = merge_fn(spark.read.parquet(path))
-    except AnalysisException as e:
-        if not any(
-            code in str(e) for code in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        ):
-            raise
-        merged = fresh
+    stored = read_parquet_if_present(spark, path)
+    merged = fresh if stored is None else merge_fn(stored)
     tmp = path.rstrip("/") + ".tmp"
     merged.write.mode("overwrite").parquet(tmp)
     if finalize_tmp is not None:
@@ -567,15 +596,15 @@ def ingest_vector_batch(
         semantic_dedup_incremental,
     )
 
-    spark = batch_df.sparkSession
-    try:
-        corpus = spark.read.parquet(index_path).filter(
-            F.col("epoch") != int(epoch_id)
-        )
-        have_corpus = corpus.limit(1).count() > 0
-    except Exception:  # first batch: nothing admitted yet
-        have_corpus = False
+    # nothing on disk yet (first batch) is the only read failure that
+    # means "no index gate"; a corrupt index raises
+    corpus = read_parquet_if_present(batch_df.sparkSession, index_path)
+    if corpus is not None:
+        corpus = corpus.filter(F.col("epoch") != int(epoch_id))
+    have_corpus = corpus is not None and corpus.limit(1).count() > 0
 
+    # the batch-sized frames the operators pin for their own readers
+    pinned: list[DataFrame] = []
     if have_corpus:
         judged = semantic_dedup_incremental(
             corpus,
@@ -586,6 +615,7 @@ def ingest_vector_batch(
             vec_col=vec_col,
             centroids=centroids,
             corpus_cell_col="cell",
+            cache_handles=pinned,
         )
     else:
         # empty index: batch-internal witness rule alone — exactly
@@ -597,32 +627,41 @@ def ingest_vector_batch(
             id_col=id_col,
             vec_col=vec_col,
             centroids=centroids,
+            cache_handles=pinned,
         )
-    # id-sized decision frame, consumed by rejects + the keep join;
-    # eager populate so the two consumers inside one job don't race
-    # an uncommitted cache (the corpus_build_ppl_gated lesson)
-    judged = judged.localCheckpoint(eager=True)
+    # id-sized decision frame, consumed by rejects + the keep join:
+    # pinned and filled before either reads it (two consumers inside
+    # one job would race an uncommitted cache — the
+    # corpus_build_ppl_gated lesson). Every pin is released before
+    # returning, so a long-running stream accumulates no cached blocks
+    judged = judged.persist()
+    pinned.append(judged)
+    try:
+        judged.count()
 
-    if rejects_path is not None:
-        judged.filter(~F.col("kept")).select(
-            id_col, "cell", "dup_of"
-        ).withColumn("epoch", F.lit(int(epoch_id))).write.mode(
-            "overwrite"
-        ).parquet(f"{rejects_path}/epoch={int(epoch_id)}")
+        if rejects_path is not None:
+            judged.filter(~F.col("kept")).select(
+                id_col, "cell", "dup_of"
+            ).withColumn("epoch", F.lit(int(epoch_id))).write.mode(
+                "overwrite"
+            ).parquet(f"{rejects_path}/epoch={int(epoch_id)}")
 
-    # judged already carries each batch vector's cell — join it back
-    # instead of re-running the assign kernel on the survivors
-    kept_cells = judged.filter(F.col("kept")).select(id_col, "cell")
-    survivors = batch_df.join(kept_cells, id_col).select(
-        F.col(id_col), F.col(vec_col), F.col("cell")
-    )
-    # epoch-directory overwrite = idempotent under foreachBatch replay;
-    # cell stays a partition column inside the epoch dir, so the
-    # combined layout reads back with BOTH partition columns and
-    # cell-equi-joins keep pruning (epoch=*/cell=*)
-    survivors.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{index_path}/epoch={int(epoch_id)}")
+        # judged already carries each batch vector's cell — join it back
+        # instead of re-running the assign kernel on the survivors
+        kept_cells = judged.filter(F.col("kept")).select(id_col, "cell")
+        survivors = batch_df.join(kept_cells, id_col).select(
+            F.col(id_col), F.col(vec_col), F.col("cell")
+        )
+        # epoch-directory overwrite = idempotent under foreachBatch replay;
+        # cell stays a partition column inside the epoch dir, so the
+        # combined layout reads back with BOTH partition columns and
+        # cell-equi-joins keep pruning (epoch=*/cell=*)
+        survivors.repartition("cell").write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(f"{index_path}/epoch={int(epoch_id)}")
+    finally:
+        for df in pinned:
+            df.unpersist(blocking=True)
 
 
 def streaming_vector_ingest(

@@ -118,11 +118,16 @@ def test_write_jdbc_batched_roundtrip(spark, nested_orders, locations_dim, tmp_p
     assert spark.read.jdbc(url, "sales").count() == 2 * out.count()
 
 
-def test_run_sales_pipeline_stats(nested_orders, locations_dim, tmp_path):
+def test_run_sales_pipeline_stats(spark, nested_orders, locations_dim, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
     cfg = _config(sales_path=str(tmp_path / "s"))
     stats = run_sales_pipeline(nested_orders, locations_dim, cfg)
     assert stats["sales_rows"] == 3
     assert stats["reject_rows"] == 1  # the malformed-quantity muffin
+    # the cache the stats were counted from is released (older RDDs
+    # may be cleaned meanwhile, so compare ids, not counts)
+    assert not set(jsc.getPersistentRDDs().keys()) - before
 
 
 def test_compact_partitions_reduces_files_keeps_rows(spark, nested_orders, locations_dim, tmp_path):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from analytics_etl_spark.streaming.events import (
@@ -306,9 +307,15 @@ def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path, monkeypatch):
     seeds the corpus (internal near-dups dropped), batch 2 is gated
     against the PERSISTED corpus state (its shingle column, so no
     kernel runs on the corpus side — its band buckets are still
-    recomputed per batch), rejects are attributable, and a replayed
-    micro-batch leaves the corpus byte-identical (epoch-directory
-    overwrite = idempotent) whether or not it records rejects.
+    recomputed per batch, O(corpus)), rejects are attributable, and a
+    replayed micro-batch leaves the corpus byte-identical
+    (epoch-directory overwrite = idempotent) whether or not it records
+    rejects. ingest_batch finds the batch-internal and the vs-corpus
+    near-dups in ONE LSH pass over one bucket frame; the expectation
+    comes from the two batch operators run one after the other
+    (minhash_lsh_dedup, then incremental_minhash_dedup), and every
+    write's plan stays within the one pass's Exchange count — a tree
+    that splits the gates again runs several times as many.
 
     Every frame ingest_batch writes reads the shingled batch from its
     pin: the executed plan runs no Python eval node, so the Arrow
@@ -432,11 +439,15 @@ def test_streaming_corpus_ingest_gates_near_dups(spark, tmp_path, monkeypatch):
     assert epoch_ids() == before
 
     # two corpus writes + the rejects of the batch that met a corpus,
-    # then the replay's corpus write
+    # then the replay's corpus write. The one-pass gate runs at most 6
+    # Exchanges in a write (the replay's, which re-derives the pairs);
+    # the two gates run one after the other ran 22-23 in a gated write
+    # of 150 docs against a 400-2,200-doc corpus
     assert len(runs) == 4
     for nodes in runs:
         assert not [n for n in nodes if "EvalPython" in n], nodes
         assert "InMemoryTableScan" in nodes, nodes
+        assert len([n for n in nodes if "Exchange" in n]) <= 6, nodes
 
 
 def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
@@ -445,7 +456,9 @@ def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
     FIXED index-time state), batch 2 is gated against the persisted
     cell-partitioned index, rejects are attributable, the streaming
     path reproduces the batch operators' judgment exactly, and a
-    replayed micro-batch leaves the index byte-identical."""
+    replayed micro-batch leaves the index byte-identical. Each
+    micro-batch releases the decision frame it pins: no RDD persisted
+    during the stream or the replay is still registered."""
     import shutil
 
     import pyspark.sql.types as T
@@ -485,6 +498,12 @@ def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
             T.StructField("embedding", T.ArrayType(T.DoubleType())),
         ]
     )
+    jsc = spark.sparkContext._jsc
+
+    def pinned_ids():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before_stream = pinned_ids()
     stage(b1, "f1.parquet")
     stream = spark.readStream.schema(schema).parquet(str(landing))
     q = streaming_vector_ingest(
@@ -502,6 +521,8 @@ def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    # older RDDs may be cleaned meanwhile, so compare ids, not counts
+    assert not pinned_ids() - before_stream
 
     index = spark.read.parquet(index_path)
     got_ids = {r["vec_id"] for r in index.select("vec_id").collect()}
@@ -534,12 +555,85 @@ def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
     before = sorted(
         (r["vec_id"], r["epoch"], r["cell"]) for r in index.collect()
     )
+    before_replay = pinned_ids()
     ingest_vector_batch(
         b2, 1, index_path, cents, rejects_path=rejects_path,
         threshold=0.3, dim=64,
     )
+    assert not pinned_ids() - before_replay
     after = sorted(
         (r["vec_id"], r["epoch"], r["cell"])
         for r in spark.read.parquet(index_path).collect()
     )
     assert after == before
+
+
+def test_ingest_batch_keeps_batch_and_corpus_ids_apart(spark, tmp_path):
+    """A batch doc may carry a doc_id the corpus already holds. The
+    one-pass gate keys its rows by (side, doc_id), so such a doc is
+    judged against the corpus doc, never paired with itself, and
+    ingest_batch keeps what the batch operators keep. Batch id 1
+    repeats corpus doc 1's text (dropped, its reject recorded); id 2
+    is new text under corpus doc 2's id (kept); id 5 copies id 2 inside
+    the batch (the higher id loses)."""
+    from analytics_etl_spark.operators.dedup import (
+        incremental_minhash_dedup,
+        minhash_lsh_dedup,
+    )
+    from analytics_etl_spark.streaming.ingest import ingest_batch
+
+    def text(seed):
+        return " ".join(f"w{seed}x{i}" for i in range(24))
+
+    def shingles(t):
+        w = t.split(" ")
+        return [" ".join(w[i : i + 3]) for i in range(len(w) - 2)]
+
+    corpus_path = str(tmp_path / "corpus")
+    rejects_path = str(tmp_path / "rejects")
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [(i, text(s), shingles(text(s))) for i, s in ids],
+            "doc_id long, text string, shingles array<string>",
+        )
+
+    corpus = frame([(1, 1), (2, 2), (3, 3)])
+    corpus.write.parquet(f"{corpus_path}/epoch=0")
+    batch = frame([(1, 1), (2, 9), (5, 9), (7, 7)])
+    ingest_batch(batch.drop("shingles"), 1, corpus_path, rejects_path=rejects_path)
+
+    # the reference reads the shingle columns: no Python kernel runs
+    internal = minhash_lsh_dedup(batch, min_jaccard=0.5, shingles_col="shingles")
+    losers = [r["doc_b"] for r in internal.collect()]
+    clean = batch.filter(~F.col("doc_id").isin(losers))
+    vs_corpus = incremental_minhash_dedup(
+        corpus, clean, min_jaccard=0.5, shingles_col="shingles"
+    ).collect()
+    want = {1, 2, 5, 7} - set(losers) - {r["batch_doc"] for r in vs_corpus}
+    got = spark.read.parquet(corpus_path).filter(F.col("epoch") == 1).collect()
+    assert {r["doc_id"] for r in got} == want == {2, 7}
+    rejects = spark.read.parquet(rejects_path).collect()
+    assert sorted((r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in rejects) == sorted(
+        (r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in vs_corpus
+    ) == [(1, 1, 1.0)]
+
+
+def test_ingest_raises_on_unreadable_corpus(spark, tmp_path):
+    """A corpus that exists but cannot be read is not an empty one:
+    admitting the batch ungated would write silent duplicates, so both
+    gated ingests raise instead."""
+    from analytics_etl_spark.streaming.ingest import ingest_batch, ingest_vector_batch
+
+    for name in ("corpus", "index"):
+        epoch_dir = tmp_path / name / "epoch=0"
+        epoch_dir.mkdir(parents=True)
+        (epoch_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(Exception, match="parquet"):
+        ingest_batch(docs, 1, str(tmp_path / "corpus"))
+    vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="parquet"):
+        ingest_vector_batch(vecs, 1, str(tmp_path / "index"), [[1.0, 0.0]], dim=2)
+    assert not (tmp_path / "corpus" / "epoch=1").exists()
+    assert not (tmp_path / "index" / "epoch=1").exists()
