@@ -276,12 +276,13 @@ def lsh_candidate_pairs(
     deployments set a cap around 10^3–10^4.
 
     ``anchored`` is the incremental form, one pass over new and
-    existing docs together: ``doc_id`` is a ``struct(side, doc_id)``
-    key, side 0 for a new doc and 1 for an existing one. Keys sort by
-    side first, so new docs lead each bucket's list, and pairs expand
-    only from side-0 positions: new-new and new-existing pairs come
-    out (the new doc always ``doc_a`` of a new-existing pair),
-    existing-existing pairs never do.
+    existing docs together: ``doc_id`` is a struct key whose first
+    field is ``side``, 0 for a new doc and 1 for an existing one, and
+    which is unique per row. Keys sort by side first, so new docs lead
+    each bucket's list, and pairs expand only from side-0 positions:
+    new-new and new-existing pairs come out (the new doc always
+    ``doc_a`` of a new-existing pair), existing-existing pairs never
+    do.
     """
     grouped = (
         buckets.groupBy("band", "bucket")

@@ -4,12 +4,13 @@ production corpus actually grows: as a Structured Streaming
 foreachBatch pipeline over document arrivals.
 
 Per micro-batch:
-1. shingle ONCE (the ``with_shingle_column`` kernel — the ingest-time
+1. shingle ONCE (``with_shingle_column`` — the ingest-time kernel
    pass, pinned for the batch's gates and write; the written column
    serves every future batch without the kernel);
 2. find every near-dup pair of the batch in ONE MinHash-LSH pass: the
    batch's shingle arrays and the existing corpus's go into one frame
-   keyed by ``struct(side, doc_id)`` (side 0 batch, 1 corpus), one
+   keyed by ``struct(side, epoch, doc_id)`` (side 0 batch, 1 corpus;
+   unique per row even where ids repeat across sides or epochs), one
    signature/band-bucket build, one (band, bucket) grouping that
    expands pairs only from batch members (batch-batch and
    batch-corpus pairs, never corpus-corpus), one exact-Jaccard
@@ -41,18 +42,23 @@ from analytics_etl_spark.operators.dedup import (
     lsh_band_buckets,
     lsh_candidate_pairs,
     minhash_signatures,
-    shingle_udf,
     verify_jaccard,
+    with_shingle_column,
 )
 from analytics_etl_spark.sinks.writer import read_parquet_if_present
 
 
-def _sided(df: DataFrame, side: int) -> DataFrame:
-    """(struct(side, doc_id), distinct shingles) rows of one side of
-    the gate; the struct key keeps a batch doc and a corpus doc apart
-    even when they carry the same doc_id."""
+def _sided(df: DataFrame, side: int, epoch) -> DataFrame:
+    """(struct(side, epoch, doc_id), distinct shingles) rows of one
+    side of the gate. The key is unique per row: side keeps a batch
+    doc apart from a corpus doc with the same doc_id, and epoch keeps
+    apart corpus rows that different batches admitted under one
+    doc_id (each is signed and verified on its own, as
+    incremental_minhash_dedup verifies each corpus row)."""
     return df.select(
-        F.struct(F.lit(side).alias("side"), F.col("doc_id")).alias("doc_id"),
+        F.struct(
+            F.lit(side).alias("side"), epoch.alias("epoch"), F.col("doc_id")
+        ).alias("doc_id"),
         # array_distinct: the silent-understated-Jaccard defense of
         # minhash_lsh_dedup's shingles_col path (see its docstring)
         F.array_distinct(F.col("shingles")).alias("shingles"),
@@ -75,19 +81,14 @@ def ingest_batch(
     rows it keeps and the rejects it records are those of
     ``minhash_lsh_dedup`` on the batch followed by
     ``incremental_minhash_dedup`` of the survivors against the corpus
-    (same banding, same verify)."""
+    (same banding, same verify). One difference: where a doc_id
+    repeats across corpus epochs, each corpus row here gets its own
+    signature, while ``incremental_minhash_dedup`` signs the union of
+    those rows' shingles under the one id (both verify each row)."""
     # the gate and the write read the shingled batch: pin it so the
     # Arrow kernel runs once per batch, and release every pin before
-    # returning so a long-running stream accumulates no cached blocks.
-    # The kernel runs on the batch's own scan partitions, not
-    # with_shingle_column's spread: a micro-batch is small, and every
-    # Python task's input row queue (one Tungsten page: 64 MB on
-    # local[4] with the engine's 8g heap) stays reachable from Spark's
-    # worker monitor thread for up to 2 s after the task starts — four
-    # spread tasks held 256 MB past the end of a ~1 s batch
-    shingled = batch_df.withColumn(
-        "shingles", shingle_udf(shingle_n)(F.col("text"))
-    ).persist()
+    # returning so a long-running stream accumulates no cached blocks
+    shingled = with_shingle_column(batch_df, n=shingle_n).persist()
     pinned = [shingled]
     try:
         shingled.count()
@@ -99,10 +100,10 @@ def ingest_batch(
         # the corpus state the first attempt saw. No corpus yet (first
         # batch) is the only read failure that means "no gate"
         corpus = read_parquet_if_present(batch_df.sparkSession, corpus_path)
-        sides = _sided(shingled, 0)
+        sides = _sided(shingled, 0, F.lit(-1))
         if corpus is not None:
             corpus = corpus.filter(F.col("epoch") != int(epoch_id))
-            sides = sides.unionByName(_sided(corpus, 1))
+            sides = sides.unionByName(_sided(corpus, 1, F.col("epoch")))
 
         exploded = sides.select("doc_id", F.explode("shingles").alias("shingle"))
         cands = lsh_candidate_pairs(

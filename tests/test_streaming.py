@@ -570,12 +570,15 @@ def test_streaming_vector_ingest_gates_semantic_dups(spark, tmp_path):
 
 def test_ingest_batch_keeps_batch_and_corpus_ids_apart(spark, tmp_path):
     """A batch doc may carry a doc_id the corpus already holds. The
-    one-pass gate keys its rows by (side, doc_id), so such a doc is
-    judged against the corpus doc, never paired with itself, and
-    ingest_batch keeps what the batch operators keep. Batch id 1
+    one-pass gate keys its rows by (side, epoch, doc_id), so such a doc
+    is judged against the corpus doc, never paired with itself, and
+    ingest_batch keeps what the batch operators keep. Batch 1: id 1
     repeats corpus doc 1's text (dropped, its reject recorded); id 2
-    is new text under corpus doc 2's id (kept); id 5 copies id 2 inside
-    the batch (the higher id loses)."""
+    is new text under corpus doc 2's id (kept, so the corpus now holds
+    doc_id 2 twice); id 5 copies id 2 inside the batch (the higher id
+    loses). Batch 2: id 11 repeats the text of the second corpus doc 2
+    (dropped against that row, not lost to the repeated id); id 12 is
+    new."""
     from analytics_etl_spark.operators.dedup import (
         incremental_minhash_dedup,
         minhash_lsh_dedup,
@@ -598,31 +601,39 @@ def test_ingest_batch_keeps_batch_and_corpus_ids_apart(spark, tmp_path):
             "doc_id long, text string, shingles array<string>",
         )
 
-    corpus = frame([(1, 1), (2, 2), (3, 3)])
-    corpus.write.parquet(f"{corpus_path}/epoch=0")
-    batch = frame([(1, 1), (2, 9), (5, 9), (7, 7)])
-    ingest_batch(batch.drop("shingles"), 1, corpus_path, rejects_path=rejects_path)
+    def check(batch, epoch, want, want_rejects):
+        """Ingest ``batch`` as ``epoch`` and compare what it wrote with
+        the batch operators run one after the other on the shingle
+        columns (no Python kernel runs in the reference)."""
+        corpus = spark.read.parquet(corpus_path)
+        ingest_batch(batch.drop("shingles"), epoch, corpus_path, rejects_path=rejects_path)
+        internal = minhash_lsh_dedup(batch, min_jaccard=0.5, shingles_col="shingles")
+        losers = [r["doc_b"] for r in internal.collect()]
+        clean = batch.filter(~F.col("doc_id").isin(losers))
+        vs_corpus = incremental_minhash_dedup(
+            corpus, clean, min_jaccard=0.5, shingles_col="shingles"
+        ).collect()
+        ref = {r["doc_id"] for r in batch.collect()} - set(losers)
+        ref -= {r["batch_doc"] for r in vs_corpus}
+        got = spark.read.parquet(corpus_path).filter(F.col("epoch") == epoch)
+        assert {r["doc_id"] for r in got.collect()} == ref == want
+        rejects = spark.read.parquet(f"{rejects_path}/epoch={epoch}").collect()
+        assert sorted((r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in rejects) == sorted(
+            (r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in vs_corpus
+        ) == want_rejects
 
-    # the reference reads the shingle columns: no Python kernel runs
-    internal = minhash_lsh_dedup(batch, min_jaccard=0.5, shingles_col="shingles")
-    losers = [r["doc_b"] for r in internal.collect()]
-    clean = batch.filter(~F.col("doc_id").isin(losers))
-    vs_corpus = incremental_minhash_dedup(
-        corpus, clean, min_jaccard=0.5, shingles_col="shingles"
-    ).collect()
-    want = {1, 2, 5, 7} - set(losers) - {r["batch_doc"] for r in vs_corpus}
-    got = spark.read.parquet(corpus_path).filter(F.col("epoch") == 1).collect()
-    assert {r["doc_id"] for r in got} == want == {2, 7}
-    rejects = spark.read.parquet(rejects_path).collect()
-    assert sorted((r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in rejects) == sorted(
-        (r["batch_doc"], r["corpus_doc"], r["jaccard"]) for r in vs_corpus
-    ) == [(1, 1, 1.0)]
+    frame([(1, 1), (2, 2), (3, 3)]).write.parquet(f"{corpus_path}/epoch=0")
+    check(frame([(1, 1), (2, 9), (5, 9), (7, 7)]), 1, {2, 7}, [(1, 1, 1.0)])
+    check(frame([(11, 9), (12, 12)]), 2, {12}, [(11, 2, 1.0)])
 
 
 def test_ingest_raises_on_unreadable_corpus(spark, tmp_path):
     """A corpus that exists but cannot be read is not an empty one:
     admitting the batch ungated would write silent duplicates, so both
-    gated ingests raise instead."""
+    gated ingests raise instead, from the footer read of the corpus
+    scan (the schema inference of ``spark.read.parquet``)."""
+    from py4j.protocol import Py4JJavaError
+
     from analytics_etl_spark.streaming.ingest import ingest_batch, ingest_vector_batch
 
     for name in ("corpus", "index"):
@@ -630,10 +641,10 @@ def test_ingest_raises_on_unreadable_corpus(spark, tmp_path):
         epoch_dir.mkdir(parents=True)
         (epoch_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    with pytest.raises(Exception, match="parquet"):
+    with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
         ingest_batch(docs, 1, str(tmp_path / "corpus"))
     vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    with pytest.raises(Exception, match="parquet"):
+    with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
         ingest_vector_batch(vecs, 1, str(tmp_path / "index"), [[1.0, 0.0]], dim=2)
     assert not (tmp_path / "corpus" / "epoch=1").exists()
     assert not (tmp_path / "index" / "epoch=1").exists()
